@@ -11,7 +11,8 @@ over tables of interleaved text+media documents
 (doc_id, spans:array<struct<kind,text,media_ref,offset>>), with every heavy
 inner loop in vectorized pandas/Arrow UDFs (no per-row Python), explicit
 salted repartitioning for giant-document skew, Iceberg-style snapshot
-checkpoints with per-partition lineage, and accumulator metrics.
+checkpoints with per-partition lineage, and exact per-run metrics observed
+on the committing write.
 """
 
 __version__ = "0.1.0"

@@ -15,7 +15,9 @@ per-Lambda).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+from cies_ocr_java_spark.session import per_jvm
 
 
 def assemble_documents(spans: DataFrame) -> DataFrame:
@@ -24,23 +26,29 @@ def assemble_documents(spans: DataFrame) -> DataFrame:
     Output: (doc_id, spans, text, failed, error, used_ocr, partition_id) —
     one row/doc; ONE shuffle (all doc-level flags fold into the same agg).
     """
-    collected = (
-        spans.groupBy("doc_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("offset"),
-                        F.col("out_kind").alias("kind"),
-                        F.col("out_text").alias("text"),
-                        F.col("media_ref"),
-                    )
+    aggs, out = _assembly_exprs()
+    return spans.groupBy("doc_id").agg(*aggs).select(*out)
+
+
+@per_jvm
+def _assembly_exprs() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    """(aggregates, output projection), built once per JVM
+    (session.per_jvm): every struct, lambda and alias below is a py4j
+    round trip."""
+    aggs = (
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.col("offset"),
+                    F.col("out_kind").alias("kind"),
+                    F.col("out_text").alias("text"),
+                    F.col("media_ref"),
                 )
-            ).alias("ordered"),
-            F.max(F.coalesce(F.col("failed"), F.lit(False))).alias("failed"),
-            F.max("error").alias("error"),
-            F.max("used_ocr").alias("used_ocr"),
-        )
+            )
+        ).alias("ordered"),
+        F.max(F.coalesce(F.col("failed"), F.lit(False))).alias("failed"),
+        F.max("error").alias("error"),
+        F.max("used_ocr").alias("used_ocr"),
     )
     # drop spans that extracted to nothing (boilerplate-only HTML, empty text),
     # then re-index densely: order = position after the drop (§2.5 semantics).
@@ -68,12 +76,13 @@ def assemble_documents(spans: DataFrame) -> DataFrame:
     )
     # partition lineage is captured post-shuffle: the id of the reduce-side
     # partition that assembled this document (doc_state.partition_id).
-    return collected.select(
-        "doc_id",
+    out = (
+        F.col("doc_id"),
         out_spans.alias("spans"),
         flat_text.alias("text"),
-        "failed",
-        "error",
-        "used_ocr",
+        F.col("failed"),
+        F.col("error"),
+        F.col("used_ocr"),
         F.spark_partition_id().alias("partition_id"),
     )
+    return aggs, out

@@ -147,8 +147,8 @@ def object_key(file_key: bytes, num: int, gen: int,
     generation low 2 bytes LE, plus the AESV2 salt."""
     h = hashlib.md5()
     h.update(file_key)
-    h.update(struct.pack("<i", num)[:3])
-    h.update(struct.pack("<i", gen)[:2])
+    h.update((num & 0xFFFFFF).to_bytes(3, "little"))
+    h.update((gen & 0xFFFF).to_bytes(2, "little"))
     if aes:
         h.update(b"sAlT")
     return h.digest()[: min(len(file_key) + 5, 16)]
@@ -216,6 +216,12 @@ class PdfDecryptor:
         if len(o_value) != 32 or len(u_value) != 32:
             raise ValueError("bad /O or /U length")
         p = int(pm.group(1))
+        # /P is a 32-bit permissions word; writers emit it signed (-44) or
+        # unsigned (4294967252), both meaning the same bits
+        if not -(1 << 31) <= p < 1 << 32:
+            raise ValueError("bad /P")
+        if p >= 1 << 31:
+            p -= 1 << 32
         key = compute_encryption_key(b"", o_value, p, id0, r, n)
         expect = compute_u_value(key, id0, r)
         ok = (expect == u_value if r == 2
@@ -370,7 +376,9 @@ def build_encrypted_pdf(text: str, method: str = "rc4-128", *,
                         bad_p: bool = False,
                         v5: bool = False,
                         non_standard: bool = False,
-                        corrupt_stream: bool = False) -> bytes:
+                        corrupt_stream: bool = False,
+                        p_perm: int = -44,
+                        stored_p: int | None = None) -> bytes:
     """A REAL encrypted PDF in the classic (PDF-1.4 table) layout:
     catalog, pages, per page-chunk a /Page + FlateDecode content
     stream ENCRYPTED under the per-object key, an /Encrypt dictionary
@@ -391,6 +399,11 @@ def build_encrypted_pdf(text: str, method: str = "rc4-128", *,
       corrupt_stream    last content stream truncated: AES fails its
                         length gate; RC4 decrypts garbage and fails
                         in the flate layer
+
+    ``p_perm`` is the signed permissions word the key is derived under
+    (-44: print restricted, typical of the reference's docs);
+    ``stored_p`` overrides the /P literal written (e.g. its unsigned
+    spelling, or a value outside 32 bits).
     """
     from cies_ocr_java_spark.operators.pdf_real import (
         PAGE_CHUNK_CHARS, _content_stream,
@@ -399,14 +412,14 @@ def build_encrypted_pdf(text: str, method: str = "rc4-128", *,
     v, r, n, aes = _METHODS[method]
     chunks = [text[i:i + PAGE_CHUNK_CHARS]
               for i in range(0, len(text), PAGE_CHUNK_CHARS)] or [""]
-    p_perm = -44  # print restricted; typical of the reference's docs
     id0 = hashlib.md5(b"fixture-id" + text.encode("utf-8")).digest()
     o_value = compute_o_value(owner_pw, user_pw, r, n)
     key = compute_encryption_key(user_pw, o_value, p_perm, id0, r, n)
     u_value = compute_u_value(key, id0, r)
     if bad_o:
         o_value = bytes([o_value[0] ^ 0xFF]) + o_value[1:]
-    stored_p = p_perm ^ 0x40 if bad_p else p_perm
+    if stored_p is None:
+        stored_p = p_perm ^ 0x40 if bad_p else p_perm
     enc = PdfDecryptor(key, aes)
 
     n_pages = len(chunks)

@@ -23,6 +23,19 @@ Scale notes (the part that matters at 100 TB / 10^12 docs):
   * ONE more shuffle for assembly (groupBy doc_id). Nothing else shuffles.
   * Resume = left_anti join against SUCCEEDED doc_state (the one genuine
     join; AQE broadcasts it when small).
+
+Driver cost (what a run pays before and after the executors work):
+  * The extraction and assembly Columns are built ONCE PER JVM
+    (session.per_jvm, keyed on the live py4j gateway plus
+    ``(ocr_mode, use_pdf_udf, use_html_udf)`` for the extraction kernel):
+    a fresh build is thousands of py4j round trips (~0.5 s), a warm
+    ``extract_spans`` call is a few hundred — just its DataFrame operations.
+    So repeated calls in one driver (``run_incremental`` ticks, streaming
+    microbatch plans, notebooks) start their first task almost at once.
+  * A ``run(resume=False)`` launches 4 Spark jobs: 3 for the staged write
+    (salt-shuffle map stage, assembly-shuffle map stage, the write) and 1
+    for the doc_state write. The staged files are read back with the schema
+    they were written with, so no schema-inference job runs.
 """
 
 from __future__ import annotations
@@ -31,11 +44,11 @@ import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from cies_ocr_java_spark import schema as S
-from cies_ocr_java_spark.metrics import ExtractionMetrics
 from cies_ocr_java_spark.operators.assemble import assemble_documents
 from cies_ocr_java_spark.operators.classify import sniff_kind, span_invalid
 from cies_ocr_java_spark.operators.html_extract import (
@@ -52,19 +65,23 @@ from cies_ocr_java_spark.operators.pdf_extract import (
     text_sufficient,
 )
 from cies_ocr_java_spark.functions.text import normalize_ws
+from cies_ocr_java_spark.session import per_jvm
 from cies_ocr_java_spark.sources.snapshots import SnapshotTable
-
-_OUT_COLS = ["doc_id", "offset", "out_kind", "out_text", "media_ref", "failed", "error", "used_ocr"]
 
 
 def flatten_spans(docs: DataFrame) -> DataFrame:
     """documents(doc_id, spans[]) -> one row per span; empty docs keep one
     null row so the validation failure (P7: body required,
     CanonicalRequest.java:64-71) is attributable."""
-    return docs.select(
-        "doc_id", F.explode_outer("spans").alias("span")
-    ).select(
-        "doc_id",
+    exploded, fields = _flatten_exprs()
+    return docs.select(*exploded).select(*fields)
+
+
+@per_jvm
+def _flatten_exprs() -> tuple[tuple[Column, ...], tuple[Column, ...]]:
+    doc_id = F.col("doc_id")
+    return (doc_id, F.explode_outer("spans").alias("span")), (
+        doc_id,
         F.col("span.kind").alias("kind"),
         F.col("span.text").alias("text"),
         F.col("span.media_ref").alias("media_ref"),
@@ -80,7 +97,8 @@ def span_level_extract(
     ocr_mode: str = "DETECTION",
 ) -> DataFrame:
     """The extraction kernel BEFORE per-doc assembly: documents -> one row
-    per span with its extracted output (_OUT_COLS). Stateless, so it runs
+    per span with its extracted output (doc_id, offset, out_kind, out_text,
+    media_ref, failed, error, used_ocr). Stateless, so it runs
     unchanged under Structured Streaming (streaming inputs skip the salt
     repartition — microbatches are the parallelism unit there); the batch
     pipeline is span_level_extract |> assemble_documents.
@@ -109,87 +127,95 @@ def span_level_extract(
         raise ValueError(f"unknown ocr_mode {ocr_mode!r}")
     spark = docs.sparkSession
     n = repartition_to or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    e = _span_exprs(ocr_mode, use_pdf_udf, use_html_udf)
 
-    flat = flatten_spans(docs)
-    flat = flat.withColumn(
-        "ekind", sniff_kind(F.col("kind"), F.col("text"), F.col("media_ref"))
-    ).withColumn(
-        "invalid",
-        F.col("kind").isNull() & F.col("text").isNull() & F.col("media_ref").isNull()
-        | span_invalid(F.col("ekind"), F.col("text"), F.col("media_ref")),
+    flat = (
+        flatten_spans(docs)
+        .withColumn("ekind", e.ekind)
+        .withColumn("invalid", e.invalid)
     )
     if not docs.isStreaming:
         # the salt shuffle: spans of one giant doc spread across n tasks
-        flat = flat.repartition(n, F.col("doc_id"), F.col("offset"))
+        flat = flat.repartition(n, *e.salt)
+    if e.pdf_udf is not None:
+        flat = flat.withColumn("p", e.pdf_udf)
+    return flat.select(*e.pdf).select(*e.out)
 
-    is_pdf = (F.col("ekind") == "pdf") & ~F.col("invalid")
+
+class _SpanExprs(NamedTuple):
+    """span_level_extract's Columns: ``ekind``/``invalid`` are added before
+    the salt shuffle on keys ``salt``, ``pdf_udf`` (pandas-UDF path only)
+    becomes struct column ``p``, ``pdf`` keeps every column and adds
+    pdf_text/page_count/pdf_malformed, and ``out`` projects the output."""
+
+    ekind: Column
+    invalid: Column
+    pdf_udf: Column | None
+    pdf: tuple[Column, ...]
+    out: tuple[Column, ...]
+    salt: tuple[Column, ...]
+
+
+@per_jvm
+def _span_exprs(ocr_mode: str, use_pdf_udf: bool, use_html_udf: bool) -> _SpanExprs:
+    """Build span_level_extract's Columns once per JVM and switch set
+    (session.per_jvm): the column builders below are the same functions
+    the registry queries call, so there is one definition of each route."""
+    kind, text, media_ref = F.col("kind"), F.col("text"), F.col("media_ref")
+    ekind, invalid = F.col("ekind"), F.col("invalid")
+
+    is_pdf = (ekind == "pdf") & ~invalid
     if use_pdf_udf:
-        # mask outputs by is_pdf: the UDF sees NULL (-> '') for non-pdf rows
-        # and would flag them malformed otherwise
-        parsed = flat.withColumn(
-            "p", pdf_layer_udf(F.when(is_pdf, F.col("text")))
-        ).select(
-            "*",
-            F.when(is_pdf, F.col("p.pdf_text")).alias("pdf_text"),
-            F.when(is_pdf, F.col("p.page_count")).alias("page_count"),
-            F.when(is_pdf, F.col("p.pdf_malformed")).alias("pdf_malformed"),
-        ).drop("p")
+        # mask the input by is_pdf: the UDF sees NULL (-> '') for non-pdf
+        # rows and would flag them malformed otherwise
+        pdf_udf = pdf_layer_udf(F.when(is_pdf, text))
+        pdf_cols = {k: F.col(f"p.{k}") for k in ("pdf_text", "page_count", "pdf_malformed")}
     else:
-        cols = pdf_layer_cols(F.col("text"))
-        parsed = flat.select(
-            "*",
-            F.when(is_pdf, cols["pdf_text"]).alias("pdf_text"),
-            F.when(is_pdf, cols["page_count"]).alias("page_count"),
-            F.when(is_pdf, cols["pdf_malformed"]).alias("pdf_malformed"),
-        )
+        pdf_udf, pdf_cols = None, pdf_layer_cols(text)
+    pdf = (F.col("*"), *(F.when(is_pdf, c).alias(k) for k, c in pdf_cols.items()))
 
+    pdf_malformed = F.col("pdf_malformed")
     sufficient = text_sufficient(F.col("pdf_text"), F.col("page_count"))
-    is_html = (F.col("ekind") == "html") & ~F.col("invalid")
-    if use_html_udf:
-        html_out = html_main_text_udf(F.when(is_html, F.col("text")))
-    else:
-        html_out = html_main_text_col(F.when(is_html, F.col("text")))
+    is_html = (ekind == "html") & ~invalid
+    html_text = html_main_text_udf if use_html_udf else html_main_text_col
+    ocr_text = ocr_analysis_text_col if ocr_mode == "ANALYSIS" else ocr_text_col
+    is_media = ekind == "media"
 
     out_text = (
-        F.when(F.col("invalid"), F.lit(None).cast("string"))
-        .when(F.col("ekind") == "media", F.lit(None).cast("string"))
-        .when(F.col("ekind") == "text", normalize_ws("text"))
-        .when(is_html, html_out)
-        .when(F.col("pdf_malformed"), F.lit(None).cast("string"))
+        F.when(invalid, F.lit(None).cast("string"))
+        .when(is_media, F.lit(None).cast("string"))
+        .when(ekind == "text", normalize_ws(text))
+        .when(is_html, html_text(F.when(is_html, text)))
+        .when(pdf_malformed, F.lit(None).cast("string"))
         .when(sufficient, F.col("pdf_text"))
-        .otherwise(
-            ocr_analysis_text_col(F.col("text"))
-            if ocr_mode == "ANALYSIS"
-            else ocr_text_col(F.col("text"))
-        )
+        .otherwise(ocr_text(text))
     )
-    failed = F.col("invalid") | F.coalesce(F.col("pdf_malformed"), F.lit(False))
+    malformed = F.coalesce(pdf_malformed, F.lit(False))
     error = (
-        F.when(F.col("invalid"), F.lit("invalid span: missing required payload"))
-        .when(
-            F.coalesce(F.col("pdf_malformed"), F.lit(False)),
-            F.lit("malformed pdf payload"),
-        )
+        F.when(invalid, F.lit("invalid span: missing required payload"))
+        .when(malformed, F.lit("malformed pdf payload"))
         .cast("string")
     )
-    used_ocr = is_pdf & ~F.coalesce(F.col("pdf_malformed"), F.lit(True)) & ~sufficient
-
-    all_spans = parsed.select(
-        "doc_id",
-        "offset",
-        F.when(F.col("ekind") == "media", F.lit("media"))
-        .otherwise(F.lit("text"))
-        .alias("out_kind"),
-        out_text.alias("out_text"),
-        F.when(F.col("ekind") == "media", F.col("media_ref"))
-        .cast("string")
-        .alias("media_ref"),
-        failed.alias("failed"),
-        error.alias("error"),
-        F.coalesce(used_ocr, F.lit(False)).alias("used_ocr"),
+    used_ocr = is_pdf & ~F.coalesce(pdf_malformed, F.lit(True)) & ~sufficient
+    doc_id, offset = F.col("doc_id"), F.col("offset")
+    return _SpanExprs(
+        ekind=sniff_kind(kind, text, media_ref),
+        invalid=kind.isNull() & text.isNull() & media_ref.isNull()
+        | span_invalid(ekind, text, media_ref),
+        pdf_udf=pdf_udf,
+        pdf=pdf,
+        out=(
+            doc_id,
+            offset,
+            F.when(is_media, F.lit("media")).otherwise(F.lit("text")).alias("out_kind"),
+            out_text.alias("out_text"),
+            F.when(is_media, media_ref).cast("string").alias("media_ref"),
+            (invalid | malformed).alias("failed"),
+            error.alias("error"),
+            F.coalesce(used_ocr, F.lit(False)).alias("used_ocr"),
+        ),
+        salt=(doc_id, offset),
     )
-
-    return all_spans.select(*_OUT_COLS)
 
 
 def extract_spans(
@@ -395,21 +421,31 @@ def run(
             done = spans_done if done is None else done.union(spans_done).distinct()
         docs = docs.join(done, "doc_id", "left_anti")
 
-    metrics = ExtractionMetrics.create(spark.sparkContext)
     # Single-pass staged commit. The previous shape persisted the full
     # extraction output (DISK_ONLY) so three consumers (spans commit, state
     # commit, metrics agg) shared one compute — paying a serialize + write
     # + read cycle of the ENTIRE output on top of the parquet write itself.
     # Now the one action writes the output parquet directly, partitioned by
     # the failed flag:
-    #   * metrics ride that action via Observation (no extra pass);
+    #   * metrics ride that action via Observation (no extra pass; exact
+    #     under task retries, unlike accumulators);
     #   * the ok partition dir is ADOPTED into extracted_spans by rename
     #     (SnapshotTable.adopt_dir — zero rewrite);
     #   * doc_state derives from a column-pruned scan of the files just
     #     written (parquet is columnar: the four small state columns cost
     #     ~nothing to re-read; the spans/text bytes are never read back).
-    # Net: one full-output write, no persist, flat heap. Measured at 150k
-    # docs / 650 MB on tmpfs, local[8]: 12.6s -> ~9s; state pass 1.0->0.5s.
+    #     The scan takes the schema the write used (EXTRACTED_SPANS_STAGED)
+    #     instead of inferring it: inference is a one-task Spark job per
+    #     directory whose answer is already known.
+    # Net: one full-output write, no persist, flat heap.
+    # Job shape of a resume=False run: 3 jobs for the staged write (the
+    # salt-shuffle and assembly-shuffle map stages, then the write) and 1
+    # for the doc_state write; nothing else launches a job. The extraction
+    # expressions come from a per-JVM cache (_span_exprs, keyed on ocr_mode
+    # and the UDF switches), so the driver starts the first task after a
+    # handful of DataFrame calls rather than thousands of py4j round trips.
+    # Measured (persisted shape -> staged write) at 150k docs / 650 MB on
+    # tmpfs, local[8]: 12.6s -> ~9s; state pass 1.0->0.5s.
     from pyspark.sql import Observation
 
     obs = Observation(f"extraction-metrics-{run_id}")
@@ -450,14 +486,15 @@ def run(
 
     state_cols = ["doc_id", "partition_id", "used_ocr", "error"]
     snap_dir = os.path.join(extracted_tbl.data_root, f"snap-{out_sid:06d}")
+    staged = spark.read.schema(S.EXTRACTED_SPANS_STAGED)
     state_src = (
-        spark.read.parquet(snap_dir)
+        staged.parquet(snap_dir)
         .select(*state_cols)
         .withColumn("failed", F.lit(False))
     )
     if os.path.isdir(failed_dir):
         state_src = state_src.unionAll(
-            spark.read.parquet(failed_dir)
+            staged.parquet(failed_dir)
             .select(*state_cols)
             .withColumn("failed", F.lit(True))
         )
@@ -491,13 +528,14 @@ def run(
     # release staging remnants (failed partition + write markers); a crash
     # before this line leaves a GC-able _tmp orphan, nothing dangling
     shutil.rmtree(staging, ignore_errors=True)
-    metrics.docs_processed.add(int(agg["docs"] or 0))
-    metrics.spans_emitted.add(int(agg["spans"] or 0))
-    metrics.bytes_processed.add(int(agg["bytes"] or 0))
-    metrics.failures.add(int(agg["failures"] or 0))
+    m = {
+        "docs_processed": int(agg["docs"] or 0),
+        "spans_emitted": int(agg["spans"] or 0),
+        "bytes_processed": int(agg["bytes"] or 0),
+        "failures": int(agg["failures"] or 0),
+    }
     wall = time.time() - t0
     parallelism = spark.sparkContext.defaultParallelism
-    m = metrics.snapshot()
     # driver-side fast commit: one metrics row must not pay a Spark job
     metrics_tbl.commit_rows(
         [

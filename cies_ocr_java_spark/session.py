@@ -9,13 +9,62 @@ maxResults(1000) pagination, DocumentExtractManager.java:544).
 
 from __future__ import annotations
 
+import functools
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Bound Arrow transfer batches: one batch holds at most this many spans, so a
 # skew tail of multi-MB payload spans stays within a bounded memory envelope.
 ARROW_MAX_RECORDS_PER_BATCH = 512
+
+# Local-mode driver heap ceiling: a real executor's multi-GB heap.
+DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Local-mode ``spark.driver.memory``: half the host's physical memory,
+    capped at DRIVER_MEM_CAP_MB. In local mode the driver JVM hosts every
+    task thread, so a heap sized past physical memory gets the process
+    OOM-killed instead of spilling or raising a clean Java OOM; the other
+    half is left to off-heap buffers, Python workers and the page cache."""
+    total_mb = None
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024  # kB
+                    break
+    except OSError:
+        pass
+    if total_mb is None:  # no procfs (macOS): ask the C library
+        total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(total_mb // 2, DRIVER_MEM_CAP_MB)}m"
+
+
+def per_jvm(build):
+    """Memoise ``build(*key)`` per live py4j gateway.
+
+    A Column is an unresolved expression tree held by the JVM, bound to no
+    DataFrame or session, so one build serves every plan, session and
+    thread of the JVM — across ``spark.stop()`` and a new session too, since
+    the gateway outlives both. Building the extraction expressions costs
+    thousands of py4j round trips; a cached lookup costs none. A different
+    gateway (a relaunched JVM) drops every entry and rebuilds."""
+    cache: dict = {}
+
+    @functools.wraps(build)
+    def cached(*key):
+        gateway = SparkContext._gateway
+        if cache.get("gateway") is not gateway:
+            cache.clear()
+            cache["gateway"] = gateway
+        if key not in cache:
+            cache[key] = build(*key)
+        return cache[key]
+
+    return cached
 
 
 def get_spark(
@@ -85,10 +134,11 @@ def get_spark(
         # default hosts ALL executor threads in local[], and the round-5
         # 10x scale-step sweep OOM'd dedup_ngram_jaccard's shuffle there
         # — the exact spill-sensitive finding the scale step exists to
-        # surface. 16g on a 128 GiB box mirrors a real executor's
-        # multi-GB heap; under spark-submit the deployment's
-        # --driver-memory wins (master is None, this branch is skipped).
-        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        # surface. The default is sized to the host (default_driver_memory);
+        # SPARK_GRAFT_DRIVER_MEM overrides it, and under spark-submit the
+        # deployment's --driver-memory wins (master is None, this branch
+        # is skipped).
+        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
         builder = builder.config("spark.driver.memory", mem)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

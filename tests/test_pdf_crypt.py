@@ -176,3 +176,30 @@ def test_encrypted_pdf15_fuzz_never_raises():
         assert "error" in r
         if r["error"] is None:
             assert isinstance(r["text"], str)
+
+
+@pytest.mark.parametrize("method", METHODS)
+def test_unsigned_p_decrypts_like_signed(method):
+    """/P 4294967292 is the unsigned spelling of the permissions word -4:
+    the key derives from the same 32 bits, so the document decrypts
+    exactly like the one that writes /P -4."""
+    signed = parse_real_pdf(build_encrypted_pdf(TEXT, method, p_perm=-4))
+    unsigned = parse_real_pdf(build_encrypted_pdf(
+        TEXT, method, p_perm=-4, stored_p=4294967292))
+    assert signed["error"] is None and signed["text"] == TEXT
+    assert unsigned == signed
+
+
+@pytest.mark.parametrize("stored_p", [1 << 32, -(1 << 31) - 1, 1 << 40])
+def test_out_of_range_p_is_an_error_row(stored_p):
+    r = parse_real_pdf(build_encrypted_pdf(TEXT, "rc4-128", stored_p=stored_p))
+    assert r["error"] == "bad /P" and r["text"] is None
+
+
+def test_object_key_takes_low_bytes_of_large_numbers():
+    """Algorithm 1 hashes the low 3 bytes of the object number and the
+    low 2 of the generation: numbers past 2^31 reduce, never raise."""
+    k = b"0123456789abcdef"
+    assert object_key(k, (1 << 31) + 4, 0, aes=False) == object_key(k, 4, 0, aes=False)
+    assert object_key(k, 4, (1 << 32) + 1, aes=True) == object_key(k, 4, 1, aes=True)
+    assert object_key(k, 0xFFFFFF, 0xFFFF, aes=False) != object_key(k, 0, 0, aes=False)
