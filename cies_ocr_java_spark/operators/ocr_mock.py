@@ -49,6 +49,16 @@ from cies_ocr_java_spark.formats import (
 # change WHAT gets captured, only whether the canonical check passes.
 _PAGE_BLOCK_PATTERN = rf"{re.escape(OCR_MARKER)} PAGE {B64_TOKEN}"
 _PAGE_RE = re.compile(_PAGE_BLOCK_PATTERN)
+# The same blocks with the canonical-base64 gate folded in: the capture must
+# span the WHOLE b64-alphabet run after the marker (non-empty lookahead at
+# its start, negative lookahead at its end) and be canonical, so a
+# non-canonical run simply does not match. Exact, because the marker's '%%'
+# never occurs inside a base64 run: no match can start inside a skipped run,
+# so the canonical blocks found are exactly those the per-block check keeps.
+_B64_CHAR = "[A-Za-z0-9+/=]"
+_CANONICAL_PAGE_BLOCK_PATTERN = (
+    rf"{re.escape(OCR_MARKER)} PAGE (?={_B64_CHAR})({B64_CANONICAL})(?!{_B64_CHAR})"
+)
 _CANONICAL_RE = re.compile(rf"^{B64_CANONICAL}$")
 _WS_RE = re.compile(WS_RUN)
 
@@ -60,12 +70,13 @@ def _col(c: Column | str) -> Column:
 def ocr_text_col(payload: Column | str) -> Column:
     """Decode PAGE blocks in document order and join with ' ', normalized.
 
-    array_join(filter(transform(filter(regexp_extract_all(...))))) — the
-    whole OCR retrieval+filter+concat contract as one codegen'd expression:
-    non-canonical b64 blocks and invalid-UTF-8 blocks are dropped, never
-    raised (degradation contract)."""
-    blocks = F.regexp_extract_all(_col(payload), F.lit(_PAGE_BLOCK_PATTERN), 1)
-    canonical = F.filter(blocks, lambda b: b.rlike(rf"^{B64_CANONICAL}$"))
+    array_join(filter(transform(regexp_extract_all(...)))) — the whole OCR
+    retrieval+filter+concat contract as one codegen'd expression:
+    non-canonical b64 blocks never match the extraction regex and
+    invalid-UTF-8 blocks are filtered out, neither raises (degradation
+    contract)."""
+    canonical = F.regexp_extract_all(
+        _col(payload), F.lit(_CANONICAL_PAGE_BLOCK_PATTERN), 1)
     decoded = F.transform(canonical, lambda b: F.unbase64(b).cast("string"))
     valid = F.filter(decoded, F.is_valid_utf8)
     return F.trim(F.regexp_replace(F.array_join(valid, " "), WS_RUN, " "))

@@ -24,6 +24,10 @@ streams are NEVER encrypted (spec 7.5.8.2), and the /Encrypt
 dictionary itself is exempt — pdf_real's xref reader therefore takes
 no decryptor, and the decryptor is built only after the xref walk.
 
+/O and /U are read in either string form, <hex> or (literal) with its
+escapes resolved; the other keys are looked up with literal-string
+contents blanked, so binary /O and /U bytes can never pose as a key.
+
 Failure contract: every handshake or cipher failure raises ValueError
 with a stable reason (pdf_real wraps it into its _PdfError error-row
 discipline). The empty-user-password policy is the PDFBox default:
@@ -39,6 +43,7 @@ everywhere.
 from __future__ import annotations
 
 import hashlib
+import re
 import struct
 import zlib
 
@@ -154,6 +159,79 @@ def object_key(file_key: bytes, num: int, gen: int,
     return h.digest()[: min(len(file_key) + 5, 16)]
 
 
+def _literal_end(buf: bytes, i: int) -> int:
+    """Index just past the literal string whose '(' is at ``i``, or -1 if
+    it never closes: unescaped parentheses nest, a backslash escapes the
+    next byte (spec 7.3.4.2)."""
+    depth = 0
+    while i < len(buf):
+        c = buf[i]
+        if c == 0x5C:  # backslash
+            i += 2
+            continue
+        if c == 0x28:
+            depth += 1
+        elif c == 0x29:
+            depth -= 1
+            if depth == 0:
+                return i + 1
+        i += 1
+    return -1
+
+
+def _mask_literals(enc: bytes) -> bytes:
+    """``enc`` with the content of every literal string blanked, same
+    length (an unclosed one blanks the rest)."""
+    out = bytearray(enc)
+    i = enc.find(b"(")
+    while i >= 0:
+        end = _literal_end(enc, i)
+        stop = end - 1 if end > 0 else len(enc)
+        out[i + 1:stop] = b" " * (stop - i - 1)
+        if end < 0:
+            break
+        i = enc.find(b"(", end)
+    return bytes(out)
+
+
+def _literal_string(b: bytes) -> bytes:
+    """Writer side: ``b`` as a PDF literal string — backslash and
+    parentheses escaped, bytes outside printable ASCII (and the dict
+    delimiters '<', '>') as 3-digit octal escapes."""
+    out = bytearray(b"(")
+    for c in b:
+        if c in b"\\()":
+            out += b"\\" + bytes([c])
+        elif 0x20 <= c < 0x7F and c not in b"<>":
+            out.append(c)
+        else:
+            out += b"\\%03o" % c
+    return bytes(out + b")")
+
+
+_HEX_STRING = re.compile(rb"<([0-9A-Fa-f\s]*)>")
+
+
+def _string_value(enc: bytes, masked: bytes, key: bytes) -> bytes | None:
+    """The bytes of the /O or /U string of an encrypt dict: a <hex>
+    string, or a (literal) string with its escapes resolved. None when
+    the key is absent; any other form (an indirect reference, a broken
+    string) raises 'unsupported /O//U string form'."""
+    m = re.search(rb"/" + key + rb"(?![A-Za-z0-9])\s*", masked)
+    if not m:
+        return None
+    i = m.end()
+    hm = _HEX_STRING.match(masked, i)
+    if hm:
+        return bytes.fromhex(re.sub(rb"\s", b"", hm.group(1)).decode("ascii"))
+    end = _literal_end(enc, i) if enc[i:i + 1] == b"(" else -1
+    if end > 0:
+        from cies_ocr_java_spark.operators.pdf_real import _unescape_literal
+
+        return _unescape_literal(enc[i + 1:end - 1])
+    raise ValueError("unsupported /O//U string form")
+
+
 _METHODS = {
     # method -> (V, R, key bytes n, aes?)
     "rc4-40": (1, 2, 5, False),
@@ -174,29 +252,30 @@ class PdfDecryptor:
 
     @classmethod
     def from_encrypt_dict(cls, enc: bytes, id0: bytes) -> PdfDecryptor:
-        import re
-
-        fm = re.search(rb"/Filter\s*/([A-Za-z0-9]+)", enc)
+        # key lookups run over the dict with literal-string contents
+        # blanked: a binary /O or /U may hold bytes like "/P 4"
+        masked = _mask_literals(enc)
+        fm = re.search(rb"/Filter\s*/([A-Za-z0-9]+)", masked)
         if not fm or fm.group(1) != b"Standard":
             raise ValueError("unsupported security handler")
-        vm = re.search(rb"/V\s+(\d+)", enc)
+        vm = re.search(rb"/V\s+(\d+)", masked)
         v = int(vm.group(1)) if vm else 0
         if v not in (1, 2, 4):
             raise ValueError("unsupported encryption version")
-        rm = re.search(rb"/R\s+(\d+)", enc)
+        rm = re.search(rb"/R\s+(\d+)", masked)
         if not rm:
             raise ValueError("encrypt dict missing /R")
         r = int(rm.group(1))
         if r not in (2, 3, 4):
             raise ValueError("unsupported encryption revision")
-        lm = re.search(rb"/Length\s+(\d+)", enc)
+        lm = re.search(rb"/Length\s+(\d+)", masked)
         bits = int(lm.group(1)) if lm else 40
         if bits % 8 or not 40 <= bits <= 128:
             raise ValueError("bad /Length")
         n = 5 if r == 2 else bits // 8
         aes = False
         if v == 4:
-            cfm = re.search(rb"/CFM\s*/([A-Za-z0-9]+)", enc)
+            cfm = re.search(rb"/CFM\s*/([A-Za-z0-9]+)", masked)
             name = cfm.group(1) if cfm else b""
             if name == b"AESV2":
                 aes = True
@@ -204,15 +283,11 @@ class PdfDecryptor:
                     raise ValueError("aes support unavailable")
             elif name != b"V2":
                 raise ValueError("unsupported crypt filter")
-        om = re.search(rb"/O\s*<([0-9A-Fa-f\s]*)>", enc)
-        um = re.search(rb"/U\s*<([0-9A-Fa-f\s]*)>", enc)
-        pm = re.search(rb"/P\s+(-?\d+)", enc)
-        if not om or not um or not pm:
+        pm = re.search(rb"/P\s+(-?\d+)", masked)
+        o_value = _string_value(enc, masked, b"O")
+        u_value = _string_value(enc, masked, b"U")
+        if o_value is None or u_value is None or not pm:
             raise ValueError("encrypt dict missing /O, /U or /P")
-        o_value = bytes.fromhex(om.group(1).decode("ascii").replace(
-            " ", "").replace("\n", ""))
-        u_value = bytes.fromhex(um.group(1).decode("ascii").replace(
-            " ", "").replace("\n", ""))
         if len(o_value) != 32 or len(u_value) != 32:
             raise ValueError("bad /O or /U length")
         p = int(pm.group(1))
@@ -378,7 +453,8 @@ def build_encrypted_pdf(text: str, method: str = "rc4-128", *,
                         non_standard: bool = False,
                         corrupt_stream: bool = False,
                         p_perm: int = -44,
-                        stored_p: int | None = None) -> bytes:
+                        stored_p: int | None = None,
+                        literal_ou: bool = False) -> bytes:
     """A REAL encrypted PDF in the classic (PDF-1.4 table) layout:
     catalog, pages, per page-chunk a /Page + FlateDecode content
     stream ENCRYPTED under the per-object key, an /Encrypt dictionary
@@ -403,7 +479,8 @@ def build_encrypted_pdf(text: str, method: str = "rc4-128", *,
     ``p_perm`` is the signed permissions word the key is derived under
     (-44: print restricted, typical of the reference's docs);
     ``stored_p`` overrides the /P literal written (e.g. its unsigned
-    spelling, or a value outside 32 bits).
+    spelling, or a value outside 32 bits). ``literal_ou`` writes /O and
+    /U as (literal) strings instead of <hex> ones.
     """
     from cies_ocr_java_spark.operators.pdf_real import (
         PAGE_CHUNK_CHARS, _content_stream,
@@ -458,8 +535,12 @@ def build_encrypted_pdf(text: str, method: str = "rc4-128", *,
                 b"/CF << /StdCF << /CFM /%s /Length %d >> >> "
                 b"/StmF /StdCF /StrF /StdCF"
                 % (b"AESV2" if aes else b"V2", n))
-        parts.append(b"/O <" + o_value.hex().encode() + b">")
-        parts.append(b"/U <" + u_value.hex().encode() + b">")
+        if literal_ou:
+            parts.append(b"/O " + _literal_string(o_value))
+            parts.append(b"/U " + _literal_string(u_value))
+        else:
+            parts.append(b"/O <" + o_value.hex().encode() + b">")
+            parts.append(b"/U <" + u_value.hex().encode() + b">")
         parts.append(b"/P %d >>" % stored_p)
         enc_dict = b" ".join(parts)
     objects.append(enc_dict)

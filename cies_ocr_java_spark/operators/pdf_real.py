@@ -1657,7 +1657,8 @@ def parse_pdf_interleaved(data: bytes, keep_samples: bool = False) -> dict:
         crypt = _make_decryptor(data, offsets, trailer)
         root = _ref(trailer, b"Root")
         catalog, _ = _load_object(data, offsets, root, crypt=crypt)
-        pages_obj, _ = _load_object(data, offsets, _ref(catalog, b"Pages"))
+        pages_obj, _ = _load_object(data, offsets, _ref(catalog, b"Pages"),
+                                    crypt=crypt)
         kids = re.search(rb"/Kids\s*\[([^\]]*)\]", pages_obj)
         if not kids:
             raise _PdfError("pages tree missing /Kids")
@@ -1669,7 +1670,7 @@ def parse_pdf_interleaved(data: bytes, keep_samples: bool = False) -> dict:
         spans: list[dict] = []
         inline_idx = 0
         for kn in kid_nums:
-            page, _ = _load_object(data, offsets, kn)
+            page, _ = _load_object(data, offsets, kn, crypt=crypt)
             xob = re.search(rb"/XObject\s*<<(.*?)>>", page, re.S)
             res = {}
             if xob:

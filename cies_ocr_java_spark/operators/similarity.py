@@ -9,11 +9,18 @@ All arithmetic is done element-wise in DOUBLE via built-in higher-order
 functions (zip_with + aggregate = a fused JVM loop, no Python), scores
 rounded to 6 decimals BEFORE ranking so rankings are reproducible across
 engines (the DuckDB oracle replicates the same math).
+
+The Column trees are built once per JVM (session.per_jvm) and keyed on
+column names and parameters: a sign bucket or a decimal norm costs
+~150-170 py4j round trips to build, a warm lookup none, and a Column is an
+unresolved expression bound to no DataFrame, so every plan can reuse it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
+
+from cies_ocr_java_spark.session import per_jvm
 
 
 # Exactness scheme: every element is cast double -> decimal(12,8) (one
@@ -50,17 +57,49 @@ def _sumsq_dec(a) -> F.Column:
     return _dec_sum(F.transform(a, lambda x: e(x) * e(x)))
 
 
-def cosine_score(a, b) -> F.Column:
-    raw = _dot_dec(a, b).cast("double") / (
-        F.sqrt(_sumsq_dec(a).cast("double")) * F.sqrt(_sumsq_dec(b).cast("double"))
-    )
-    return raw.cast("decimal(12,6)").cast("double")
-
-
 def l2_norm(a) -> F.Column:
     return (
         F.sqrt(_sumsq_dec(a).cast("double")).cast("decimal(12,6)").cast("double")
     )
+
+
+@per_jvm
+def _norm_col(vec_col: str) -> Column:
+    """sqrt of the decimal-exact sum of squares of ``vec_col``, as double."""
+    return F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double"))
+
+
+@per_jvm
+def _bucket_col(vec_col: str, bits: int) -> Column:
+    return sign_bucket(F.col(vec_col), bits)
+
+
+@per_jvm
+def _cosine_col(a: str, b: str, na: str, nb: str) -> Column:
+    """Decimal-exact cosine of the vector columns ``a``, ``b`` over their
+    hoisted norm columns ``na``, ``nb``, rounded to 6 decimals."""
+    raw = _dot_dec(F.col(a), F.col(b)).cast("double") / (F.col(na) * F.col(nb))
+    return raw.cast("decimal(12,6)").cast("double")
+
+
+@per_jvm
+def _approx_cosine_col(a: str, b: str, na: str, nb: str) -> Column:
+    """All-double cosine (~100x cheaper per pair than the decimal one):
+    the candidate pre-filter of the two-phase scoring."""
+    dot = F.aggregate(
+        F.zip_with(F.col(a), F.col(b),
+                   lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return dot / (F.col(na) * F.col(nb))
+
+
+@per_jvm
+def _rank_col(part: str, score: str, tie: str) -> Column:
+    """row_number per ``part`` over (``score`` desc, ``tie`` asc)."""
+    w = Window.partitionBy(part).orderBy(F.col(score).desc(), F.col(tie).asc())
+    return F.row_number().over(w)
 
 
 def brute_force_topk(
@@ -77,28 +116,22 @@ def brute_force_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
-        F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double")).alias("qnorm"),
+        _norm_col(vec_col).alias("qnorm"),
     )
     e = emb.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("vec"),
-        F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double")).alias("enorm"),
+        _norm_col(vec_col).alias("enorm"),
     )
     scored = e.crossJoin(F.broadcast(q)).where(
         F.col("neighbor_id") != F.col("query_id")
     )
-    raw = _dot_dec(F.col("vec"), F.col("qvec")).cast("double") / (
-        F.col("enorm") * F.col("qnorm")
-    )
     scored = scored.select(
         "query_id", "neighbor_id",
-        raw.cast("decimal(12,6)").cast("double").alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
+        _cosine_col("vec", "qvec", "enorm", "qnorm").alias("score"),
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", _rank_col("query_id", "score", "neighbor_id"))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "score", "rank")
     )
@@ -126,41 +159,44 @@ def cosine_near_dup_pairs(
     hyperplane-sign key — AQE splits hot buckets), then exact decimal cosine
     verifies. Norms are computed once per vector before the join, never per
     pair. Recall/cost trades via ``bits`` exactly like lsh_bucketed_topk."""
-    side = emb.select(
+    side, pair, prefilter, out, keep = _near_dup_exprs(
+        threshold, bits, id_col, vec_col)
+    sides = emb.select(*side)
+    return (
+        sides.alias("a").join(sides.alias("b"), pair)
+        .where(prefilter)
+        .select(*out)
+        .where(keep)
+    )
+
+
+@per_jvm
+def _near_dup_exprs(threshold: float, bits: int, id_col: str, vec_col: str):
+    """(side projection, pair condition, pre-filter, output, threshold
+    filter) of cosine_near_dup_pairs, built once per JVM."""
+    side = (
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        sign_bucket(F.col(vec_col), bits).alias("bucket"),
-        F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double")).alias("nrm"),
+        _bucket_col(vec_col, bits).alias("bucket"),
+        _norm_col(vec_col).alias("nrm"),
     )
-    a, b = side.alias("a"), side.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")),
-    )
+    pair = (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id"))
     # Two-phase scoring: a cheap all-double dot product prunes the candidate
     # pairs first (~100x cheaper than decimal arithmetic per pair); the
     # decimal-exact score is then computed ONLY for pairs within eps of the
     # threshold boundary. eps=1e-4 dwarfs the double-vs-decimal rounding
     # difference (~1e-7 relative), so no pair with exact score >= threshold
     # can be lost — output is bit-identical to single-phase.
-    approx = F.aggregate(
-        F.zip_with(
-            F.col("a.vec"),
-            F.col("b.vec"),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    ) / (F.col("a.nrm") * F.col("b.nrm"))
-    survivors = pairs.where(approx >= threshold - 1e-4)
-    raw = _dot_dec(F.col("a.vec"), F.col("b.vec")).cast("double") / (
-        F.col("a.nrm") * F.col("b.nrm")
+    prefilter = (
+        _approx_cosine_col("a.vec", "b.vec", "a.nrm", "b.nrm")
+        >= threshold - 1e-4
     )
-    return survivors.select(
+    out = (
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
-        raw.cast("decimal(12,6)").cast("double").alias("score"),
-    ).where(F.col("score") >= threshold)
+        _cosine_col("a.vec", "b.vec", "a.nrm", "b.nrm").alias("score"),
+    )
+    return side, pair, prefilter, out, F.col("score") >= threshold
 
 
 def ivf_assignments(
@@ -175,23 +211,19 @@ def ivf_assignments(
     c = centroids.select(
         F.col(id_col).alias("cell"),
         F.col(vec_col).alias("cvec"),
-        F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double")).alias("cnorm"),
+        _norm_col(vec_col).alias("cnorm"),
     )
     e = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double")).alias("nrm"),
-    )
-    raw = _dot_dec(F.col("vec"), F.col("cvec")).cast("double") / (
-        F.col("nrm") * F.col("cnorm")
+        _norm_col(vec_col).alias("nrm"),
     )
     scored = e.crossJoin(F.broadcast(c)).select(
         "id", "vec", "nrm", "cell",
-        raw.cast("decimal(12,6)").cast("double").alias("cscore"),
+        _cosine_col("vec", "cvec", "nrm", "cnorm").alias("cscore"),
     )
-    w = Window.partitionBy("id").orderBy(F.col("cscore").desc(), F.col("cell").asc())
     return (
-        scored.withColumn("r", F.row_number().over(w))
+        scored.withColumn("r", _rank_col("id", "cscore", "cell"))
         .where(F.col("r") == 1)
         .select("id", "vec", "nrm", "cell")
     )
@@ -214,44 +246,32 @@ def ivf_topk(
     c = centroids.select(
         F.col(id_col).alias("cell"),
         F.col(vec_col).alias("cvec"),
-        F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double")).alias("cnorm"),
+        _norm_col(vec_col).alias("cnorm"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
-        F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double")).alias("qnorm"),
-    )
-    qraw = _dot_dec(F.col("qvec"), F.col("cvec")).cast("double") / (
-        F.col("qnorm") * F.col("cnorm")
+        _norm_col(vec_col).alias("qnorm"),
     )
     qscored = q.crossJoin(F.broadcast(c)).select(
         "query_id", "qvec", "qnorm", "cell",
-        qraw.cast("decimal(12,6)").cast("double").alias("cscore"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cscore").desc(), F.col("cell").asc()
+        _cosine_col("qvec", "cvec", "qnorm", "cnorm").alias("cscore"),
     )
     probes = (
-        qscored.withColumn("r", F.row_number().over(wq))
+        qscored.withColumn("r", _rank_col("query_id", "cscore", "cell"))
         .where(F.col("r") <= n_probe)
         .select("query_id", "qvec", "qnorm", "cell")
     )
     cand = assigned.join(F.broadcast(probes), "cell").where(
         F.col("id") != F.col("query_id")
     )
-    raw = _dot_dec(F.col("vec"), F.col("qvec")).cast("double") / (
-        F.col("nrm") * F.col("qnorm")
-    )
     scored = cand.select(
         "query_id",
         F.col("id").alias("neighbor_id"),
-        raw.cast("decimal(12,6)").cast("double").alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
+        _cosine_col("vec", "qvec", "nrm", "qnorm").alias("score"),
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", _rank_col("query_id", "score", "neighbor_id"))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "score", "rank")
     )
@@ -406,21 +426,11 @@ def semdedup(emb: DataFrame, seeds: DataFrame, threshold: float,
         F.col("vec").alias("bv"), F.col("nrm").alias("nb"),
     )
     pairs = a.join(b, "cell").where(F.col("id_a") < F.col("id_b"))
-    approx = F.aggregate(
-        F.zip_with(
-            F.col("av"), F.col("bv"),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    ) / (F.col("na") * F.col("nb"))
-    survivors = pairs.where(approx >= threshold - 1e-4)
-    score = _dot_dec(F.col("av"), F.col("bv")).cast("double") / (
-        F.col("na") * F.col("nb")
-    )
+    survivors = pairs.where(
+        _approx_cosine_col("av", "bv", "na", "nb") >= threshold - 1e-4)
     dup = (
         survivors.select(
-            "id_b", score.cast("decimal(12,6)").cast("double").alias("score")
+            "id_b", _cosine_col("av", "bv", "na", "nb").alias("score")
         )
         .where(F.col("score") >= threshold)
         .select(F.col("id_b").alias("id"))
@@ -439,35 +449,45 @@ def lsh_bucketed_topk(
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's sign bucket; the
     bucket equi-join replaces the cross product at scale."""
-    e = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
-        sign_bucket(F.col(vec_col), bits).alias("bucket"),
-        F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double")).alias("enorm"),
+    e_side, q_side, not_self, scored, rank, top_k, out = _lsh_topk_exprs(
+        k, bits, id_col, vec_col)
+    return (
+        emb.select(*e_side)
+        .join(F.broadcast(queries.select(*q_side)), "bucket")
+        .where(not_self)
+        .select(*scored)
+        .withColumn("rank", rank)
+        .where(top_k)
+        .select(*out)
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        sign_bucket(F.col(vec_col), bits).alias("bucket"),
-        F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double")).alias("qnorm"),
-    )
-    scored = e.join(F.broadcast(q), "bucket").where(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    raw = _dot_dec(F.col("vec"), F.col("qvec")).cast("double") / (
-        F.col("enorm") * F.col("qnorm")
-    )
-    scored = scored.select(
-        "query_id", "neighbor_id",
-        raw.cast("decimal(12,6)").cast("double").alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
+
+
+@per_jvm
+def _lsh_topk_exprs(k: int, bits: int, id_col: str, vec_col: str):
+    """(corpus side, query side, pair filter, scored projection, rank,
+    top-k filter, output) of lsh_bucketed_topk, built once per JVM."""
+
+    def side(id_as: str, vec_as: str, norm_as: str) -> tuple[Column, ...]:
+        return (
+            F.col(id_col).alias(id_as),
+            F.col(vec_col).alias(vec_as),
+            _bucket_col(vec_col, bits).alias("bucket"),
+            _norm_col(vec_col).alias(norm_as),
+        )
+
+    scored = (
+        F.col("query_id"),
+        F.col("neighbor_id"),
+        _cosine_col("vec", "qvec", "enorm", "qnorm").alias("score"),
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+        side("neighbor_id", "vec", "enorm"),
+        side("query_id", "qvec", "qnorm"),
+        F.col("neighbor_id") != F.col("query_id"),
+        scored,
+        _rank_col("query_id", "score", "neighbor_id"),
+        F.col("rank") <= k,
+        (*scored[:2], F.col("score"), F.col("rank")),
     )
 
 def hard_negative_pairs(
@@ -493,32 +513,26 @@ def hard_negative_pairs(
     e = emb.select(
         F.col(id_col).alias("negative_id"),
         F.col(vec_col).alias("vec"),
-        sign_bucket(F.col(vec_col), bits).alias("bucket"),
-        F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double")).alias("enorm"),
+        _bucket_col(vec_col, bits).alias("bucket"),
+        _norm_col(vec_col).alias("enorm"),
     )
     a = emb.select(
         F.col(id_col).alias("anchor_id"),
         F.col(vec_col).alias("avec"),
-        sign_bucket(F.col(vec_col), bits).alias("bucket"),
-        F.sqrt(_sumsq_dec(F.col(vec_col)).cast("double")).alias("anorm"),
-    )
-    raw = _dot_dec(F.col("vec"), F.col("avec")).cast("double") / (
-        F.col("enorm") * F.col("anorm")
+        _bucket_col(vec_col, bits).alias("bucket"),
+        _norm_col(vec_col).alias("anorm"),
     )
     scored = (
         e.join(a, "bucket")
         .where(F.col("negative_id") != F.col("anchor_id"))
         .select(
             "anchor_id", "negative_id",
-            raw.cast("decimal(12,6)").cast("double").alias("score"),
+            _cosine_col("vec", "avec", "enorm", "anorm").alias("score"),
         )
         .where((F.col("score") >= lo) & (F.col("score") < hi))
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("score").desc(), F.col("negative_id").asc()
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", _rank_col("anchor_id", "score", "negative_id"))
         .where(F.col("rank") <= k)
         .select("anchor_id", "negative_id", "score", "rank")
     )

@@ -36,6 +36,10 @@ Driver cost (what a run pays before and after the executors work):
     (salt-shuffle map stage, assembly-shuffle map stage, the write) and 1
     for the doc_state write. The staged files are read back with the schema
     they were written with, so no schema-inference job runs.
+  * Every snapshot ``run()`` commits records its schema in the table
+    manifest (the adopted spans dir gets EXTRACTED_SPANS_STAGED), so a
+    resume run reads extracted_spans and doc_state back without
+    schema-inference jobs too (SnapshotTable.read).
 """
 
 from __future__ import annotations
@@ -430,7 +434,8 @@ def run(
     #   * metrics ride that action via Observation (no extra pass; exact
     #     under task retries, unlike accumulators);
     #   * the ok partition dir is ADOPTED into extracted_spans by rename
-    #     (SnapshotTable.adopt_dir — zero rewrite);
+    #     (SnapshotTable.adopt_dir — zero rewrite), its schema recorded in
+    #     the manifest so later reads of the table skip inference;
     #   * doc_state derives from a column-pruned scan of the files just
     #     written (parquet is columnar: the four small state columns cost
     #     ~nothing to re-read; the spans/text bytes are never read back).
@@ -482,7 +487,9 @@ def run(
         # partitioning wrote no dir — adopt an empty but schema-bearing
         # snapshot so multi-snapshot reads keep a schema source
         _write_empty_staged(ok_dir)
-    out_sid = extracted_tbl.adopt_dir(ok_dir, mode="append")
+    out_sid = extracted_tbl.adopt_dir(
+        ok_dir, mode="append", schema=S.EXTRACTED_SPANS_STAGED
+    )
 
     state_cols = ["doc_id", "partition_id", "used_ocr", "error"]
     snap_dir = os.path.join(extracted_tbl.data_root, f"snap-{out_sid:06d}")

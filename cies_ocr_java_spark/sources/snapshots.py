@@ -13,6 +13,19 @@ between steps) are simply invisible and can be GC'd. A snapshot entry lists
 every data dir that composes it, so reads are a single multi-path parquet
 scan (column pruning + predicate pushdown intact).
 
+Schema in the manifest (the Iceberg table-metadata analog): each
+unpartitioned commit stores the Spark schema of the data dir it adds as
+JSON in its manifest entry (``schema``; ``commit`` stores ``df.schema``,
+``commit_rows`` and ``adopt_dir`` the schema they are given, and
+``delete_where``/``compact``/``merge`` the schema of what they rewrite).
+A read whose data dirs all carry one stored schema hands it to the parquet
+reader, so the scan starts without a schema-inference job (a one-task
+Spark job per read otherwise). Spark makes a supplied schema nullable just
+like an inferred one, so the rows and schema read back are the same.
+Legacy entries without the key, hive-partitioned dirs (whose partition
+value types Spark infers from path strings) and histories that mix
+schemas are inferred exactly as before, as is every ``merge_schema`` read.
+
 Swapping in real Iceberg later is a config change: this class's API
 (commit/read/history/current) mirrors what a SparkCatalog table gives you.
 
@@ -30,6 +43,7 @@ renaming — self-healing, no manual ``gc_orphans()`` required.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -38,6 +52,7 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 LOG_FILE = "snapshot-log.json"
 LOCK_DIR = "_commit.lock"
@@ -55,6 +70,31 @@ LOCK_STALE_SECONDS = 60.0
 TMP_GRACE_SECONDS = 6 * 3600.0
 
 
+@functools.lru_cache(maxsize=64)
+def _struct(schema_json: str) -> StructType:
+    return StructType.fromJson(json.loads(schema_json))
+
+
+_NULL_FLAGS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _nullable_json(schema: StructType) -> str:
+    """``schema`` as stored in the manifest: every field, array element
+    and map value nullable — how Spark reads parquet back, supplied schema
+    or inferred — so commits that differ only in nullability (a literal
+    column is non-null) compare equal and still read with one schema."""
+    def relax(j):
+        if isinstance(j, list):
+            return [relax(x) for x in j]
+        if isinstance(j, dict):
+            return {k: True if k in _NULL_FLAGS else relax(v)
+                    for k, v in j.items()}
+        return j
+
+    return json.dumps(relax(schema.jsonValue()), separators=(",", ":"),
+                      sort_keys=True)
+
+
 @dataclass
 class Snapshot:
     snapshot_id: int
@@ -64,6 +104,7 @@ class Snapshot:
     ts: float
     meta: dict | None = None  # producer metadata (e.g. stream batch id)
     partition_by: list[str] | None = None  # hive layout of THIS commit's dir
+    schema: str | None = None  # StructType JSON of THIS commit's dir, if known
 
 
 class SnapshotTable:
@@ -121,7 +162,8 @@ class SnapshotTable:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp_dir)
-        return self._finalize(tmp_dir, mode, meta=meta, partition_by=partition_by)
+        return self._finalize(tmp_dir, mode, meta=meta, partition_by=partition_by,
+                              schema=df.schema)
 
     def commit_rows(self, rows: list[tuple], schema, mode: str = "append",
                     meta: dict | None = None) -> int:
@@ -146,17 +188,20 @@ class SnapshotTable:
         tmp_dir = os.path.join(self.data_root, f"_tmp-{uuid.uuid4().hex}")
         os.makedirs(tmp_dir)
         pq.write_table(tbl, os.path.join(tmp_dir, "part-00000.parquet"))
-        return self._finalize(tmp_dir, mode, meta=meta)
+        return self._finalize(tmp_dir, mode, meta=meta, schema=schema)
 
     def adopt_dir(self, src_dir: str, mode: str = "append", op: str | None = None,
-                  meta: dict | None = None) -> int:
+                  meta: dict | None = None,
+                  schema: StructType | None = None) -> int:
         """Adopt an externally-written parquet directory as a new snapshot
         by RENAME — zero data rewrite. This is how a producer that already
         wrote its output once (e.g. the pipeline's staged write) commits
         without paying a second copy; src_dir must live on the table's
         filesystem (write it under ``data/_tmp-*`` so a crash leaves only a
-        GC-able orphan). Same crash-safe manifest protocol as commit()."""
-        return self._finalize(src_dir, mode, op=op, meta=meta)
+        GC-able orphan). Same crash-safe manifest protocol as commit().
+        ``schema`` is the schema the producer wrote the files with; given,
+        reads take it instead of inferring one."""
+        return self._finalize(src_dir, mode, op=op, meta=meta, schema=schema)
 
     # --- commit arbitration --------------------------------------------------
     def _acquire_lock(self, timeout: float = 30.0) -> str:
@@ -231,7 +276,8 @@ class SnapshotTable:
     def _finalize(self, tmp_dir: str, mode: str, op: str | None = None,
                   meta: dict | None = None,
                   partition_by: list[str] | None = None,
-                  keep_dirs: list[str] | None = None) -> int:
+                  keep_dirs: list[str] | None = None,
+                  schema: StructType | None = None) -> int:
         """Steps 2-3 of the commit protocol: atomic rename + manifest swap,
         serialized across writers by the commit lock. A crash orphan the
         locked section renamed aside is reclaimed HERE, after release —
@@ -242,7 +288,7 @@ class SnapshotTable:
         try:
             return self._finalize_locked(tmp_dir, mode, op=op, meta=meta,
                                          partition_by=partition_by,
-                                         keep_dirs=keep_dirs)
+                                         keep_dirs=keep_dirs, schema=schema)
         finally:
             self._release_lock()
             aside, self._orphan_aside = self._orphan_aside, None
@@ -252,7 +298,8 @@ class SnapshotTable:
     def _finalize_locked(self, tmp_dir: str, mode: str, op: str | None,
                          meta: dict | None,
                          partition_by: list[str] | None = None,
-                         keep_dirs: list[str] | None = None) -> int:
+                         keep_dirs: list[str] | None = None,
+                         schema: StructType | None = None) -> int:
         log = self._read_log()
         sid = int(log["current"]) + 1
         final_rel = f"snap-{sid:06d}"
@@ -297,6 +344,10 @@ class SnapshotTable:
             ts=time.time(),
             meta=meta,
             partition_by=list(partition_by) if partition_by else None,
+            # a hive layout's partition columns are typed from path strings
+            # at read time, so only an unpartitioned dir's schema is stored
+            schema=_nullable_json(schema)
+            if schema is not None and not partition_by else None,
         )
         log["snapshots"].append(entry.__dict__)
         log["current"] = sid
@@ -322,11 +373,31 @@ class SnapshotTable:
         for s in log["snapshots"]:
             if s["snapshot_id"] == sid:
                 paths = [os.path.join(self.data_root, d) for d in s["data_dirs"]]
-                reader = spark.read
-                if merge_schema:
-                    reader = reader.option("mergeSchema", "true")
-                return reader.parquet(*paths)
+                return self._reader(spark, log, s["data_dirs"],
+                                    merge_schema).parquet(*paths)
         raise KeyError(f"snapshot {sid} not found in {self.root}")
+
+    @staticmethod
+    def _dir_schemas(log: dict) -> dict[str, str | None]:
+        """Map each data dir ever created to the stored schema JSON of the
+        commit that created it (None: a legacy entry or a partitioned
+        dir), the way _dir_partitioning maps layouts."""
+        return {s["data_dirs"][-1]: s.get("schema")
+                for s in log["snapshots"] if s["data_dirs"]}
+
+    def _reader(self, spark: SparkSession, log: dict, dirs: list[str],
+                merge_schema: bool = False):
+        """``spark.read`` for a scan of ``dirs``: with the stored schema
+        when every dir carries the same one, else inferring as Spark
+        does (see the module docstring)."""
+        reader = spark.read
+        if merge_schema:
+            return reader.option("mergeSchema", "true")
+        stored = self._dir_schemas(log)
+        schemas = {stored.get(d) for d in dirs}
+        if len(schemas) == 1 and None not in schemas:
+            reader = reader.schema(_struct(schemas.pop()))
+        return reader
 
     def current_partitioning(self) -> list[str] | None:
         """The hive partition columns of the CURRENT snapshot (None if
@@ -451,6 +522,7 @@ class SnapshotTable:
             return int(log["current"])
 
         dir_pb = self._dir_partitioning()
+        dir_schema = self._dir_schemas(log)
         by_dir: dict[str, list[str]] = {}
         for rel in cur_dirs:
             d_abs = os.path.realpath(os.path.join(self.data_root, rel))
@@ -465,6 +537,11 @@ class SnapshotTable:
                 f"({sorted(layouts)}) — compact() first"
             )
         pb = list(next(iter(layouts))) or None
+        # the new dir holds files of the affected dirs only (linked or
+        # rewritten under the same schema), so it keeps their one schema
+        schemas = {dir_schema.get(rel) for rel in by_dir}
+        new_schema = (_struct(next(iter(schemas)))
+                      if len(schemas) == 1 and None not in schemas else None)
 
         os.makedirs(self.data_root, exist_ok=True)
         tmp_dir = os.path.join(self.data_root, f"_tmp-{uuid.uuid4().hex}")
@@ -482,10 +559,10 @@ class SnapshotTable:
                     f"{rel.replace(os.sep, '_')}-{os.path.basename(sub)}")
                 self._link_or_copy(f, dst)
                 n_linked += 1
-            survivors = (
-                spark.read.option("basePath", d_abs).parquet(*hits)
-                .filter(keep)
-            )
+            reader = spark.read.option("basePath", d_abs)
+            if dir_schema.get(rel):
+                reader = reader.schema(_struct(dir_schema[rel]))
+            survivors = reader.parquet(*hits).filter(keep)
             side = os.path.join(self.data_root,
                                 f"_tmp-rw-{uuid.uuid4().hex}")
             w = survivors.write.mode("overwrite")
@@ -508,7 +585,7 @@ class SnapshotTable:
                   "files_rewritten": len(affected_files),
                   "files_linked": n_linked,
                   "dirs_kept": len(keep_dirs)},
-            partition_by=pb, keep_dirs=keep_dirs,
+            partition_by=pb, keep_dirs=keep_dirs, schema=new_schema,
         )
 
     def compact(self, spark: SparkSession, target_files: int | None = None) -> int:
@@ -546,7 +623,7 @@ class SnapshotTable:
             writer = df.repartition(n).write.mode("overwrite")
         writer.parquet(tmp_dir)
         return self._finalize(tmp_dir, "overwrite", op="compact",
-                              partition_by=part)
+                              partition_by=part, schema=df.schema)
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:
         """Drop all but the last ``keep_last`` snapshots from the manifest,
@@ -652,7 +729,7 @@ class SnapshotTable:
         if not new_dirs:
             return self.read(spark, snapshot_id=to_sid).limit(0)
         paths = [os.path.join(self.data_root, d) for d in new_dirs]
-        return spark.read.parquet(*paths)
+        return self._reader(spark, log, new_dirs).parquet(*paths)
 
     def gc_orphans(self, tmp_grace_seconds: float = TMP_GRACE_SECONDS) -> list[str]:
         """Remove data dirs not referenced by any snapshot (crash leftovers).

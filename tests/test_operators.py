@@ -72,6 +72,30 @@ def test_ocr_page_filter_and_order(spark):
     assert _decode_ocr_batch(pd.Series([pdf])).iloc[0] == "alpha beta gamma delta"
 
 
+def test_ocr_canonical_gate_edges_match_oracle(spark):
+    """The canonical-base64 gate folded into the PAGE-block regex keeps
+    exactly the blocks the oracle's scan decodes: an interior '=', a
+    missing pad, an empty token after the marker (also right before the
+    next marker) and a marker at EOF all skip without shifting the
+    blocks around them."""
+    m = "%%OCRBlock PAGE "
+    payloads = [
+        f"{m}YWJj=ZGVm\n{m}b2s=\n",          # interior '=' skipped
+        f"{m}YWI\n{m}b2s=\n",                # missing padding skipped
+        f"{m}\n{m}b2s=\n",                   # empty token, then a block
+        f"{m}{m}aGk=\n",                      # empty token before a marker
+        f"{m}b2s=\n{m}",                      # marker at EOF
+        f"{m}b2s=\n%%OCRBlock PAGE",          # truncated marker at EOF
+        f"{m}b2s=\n{m}aGk=",                  # block ends at EOF
+        f"{m}aGk=!{m}YWJj==\n",               # run ended by '!'; '==' overrun
+    ]
+    df = spark.createDataFrame([(p,) for p in payloads], "payload string")
+    got = [r["t"] for r in df.select(ocr_text_col("payload").alias("t")).collect()]
+    want = [oracle.parse_pdf(p)["ocr_text"] for p in payloads]
+    assert got == want == list(_decode_ocr_batch(pd.Series(payloads)))
+    assert want == ["ok", "ok", "ok", "hi", "ok", "ok", "ok hi", "hi"]
+
+
 def test_html_boilerplate_dropped():
     html = (
         "<html><head><title>T</title><style>p{}</style></head><body>"

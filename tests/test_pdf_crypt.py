@@ -203,3 +203,58 @@ def test_object_key_takes_low_bytes_of_large_numbers():
     assert object_key(k, (1 << 31) + 4, 0, aes=False) == object_key(k, 4, 0, aes=False)
     assert object_key(k, 4, (1 << 32) + 1, aes=True) == object_key(k, 4, 1, aes=True)
     assert object_key(k, 0xFFFFFF, 0xFFFF, aes=False) != object_key(k, 0, 0, aes=False)
+
+
+@pytest.mark.parametrize("method", METHODS)
+def test_literal_string_o_u_decrypt_like_hex(method):
+    """/O and /U written as literal strings (escaped parentheses,
+    backslashes and octal bytes) derive the same key as the <hex> form."""
+    hexed = parse_real_pdf(build_encrypted_pdf(TEXT, method))
+    literal_pdf = build_encrypted_pdf(TEXT, method, literal_ou=True)
+    assert b"/O (" in literal_pdf and b"/U (" in literal_pdf
+    assert parse_real_pdf(literal_pdf) == hexed
+    assert hexed["error"] is None and hexed["text"] == TEXT
+
+
+def _rc4_128_dict(o: bytes, u: bytes) -> bytes:
+    return b"<< /Filter /Standard /V 2 /R 3 /Length 128 /O " + o + b" /U " + u + b" /P -44 >>"
+
+
+def test_literal_o_u_contents_never_pose_as_keys():
+    """R3 compares only the first 16 bytes of /U, so its tail is free
+    pad: a pad spelling '/P 7' and balanced parentheses inside the
+    literal must not be read as the dict's /P."""
+    from cies_ocr_java_spark.operators.pdf_crypt import _literal_string
+
+    id0 = b"i" * 16
+    o = compute_o_value(b"owner", b"", 3, 16)
+    key = compute_encryption_key(b"", o, -44, id0, 3, 16)
+    u = compute_u_value(key, id0, 3)[:16] + b"/P 7 /R 2 (ab) x"
+    hexed = PdfDecryptor.from_encrypt_dict(
+        _rc4_128_dict(b"<" + o.hex().encode() + b">", b"<" + u.hex().encode() + b">"), id0)
+    literal = PdfDecryptor.from_encrypt_dict(
+        _rc4_128_dict(_literal_string(o), b"(" + u[:16].replace(b"\\", b"\\\\")
+                      .replace(b"(", b"\\(").replace(b")", b"\\)") + b"/P 7 /R 2 (ab) x)"),
+        id0)
+    assert literal.file_key == hexed.file_key == key
+
+
+@pytest.mark.parametrize("form", [b"7 0 R", b"(unclosed", b"<zz>", b"[<00>]"])
+def test_unsupported_o_u_string_forms_raise_distinctly(form):
+    with pytest.raises(ValueError, match=r"unsupported /O//U string form"):
+        PdfDecryptor.from_encrypt_dict(
+            _rc4_128_dict(form, b"<" + b"00" * 32 + b">"), b"i" * 16)
+
+
+@pytest.mark.parametrize("method", METHODS)
+def test_interleaved_parse_decrypts_pdf15_object_streams(method):
+    """parse_pdf_interleaved loads the Pages node and every page dict
+    through the decryptor, so an encrypted PDF-1.5 (dicts inside an
+    encrypted ObjStm) yields the spans of its plaintext twin."""
+    from cies_ocr_java_spark.operators.pdf_crypt import build_encrypted_pdf15
+    from cies_ocr_java_spark.operators.pdf_real import parse_pdf_interleaved
+
+    enc = parse_pdf_interleaved(build_encrypted_pdf15(TEXT, method))
+    plain = parse_pdf_interleaved(build_real_pdf(TEXT, xref_stream=True))
+    assert enc["error"] is None
+    assert enc == plain and plain["spans"]

@@ -51,3 +51,29 @@ def test_both_ico_variants_are_distinct_entries():
         q.QUERIES["media_ico_decode"]
         is not q.QUERIES["media_ico_multi_decode"]
     )
+
+
+def test_http_range_reassembly_oracle_on_a_partial_trailing_group(spark, tmp_path):
+    """498 documents leave the last 4-doc group (gid 124) with two of its
+    four slots: the engine's contiguity fold cannot tile [0, total), and
+    the oracle must agree that the group is incomplete."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.check_queries import compare
+
+    n = 498
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(n), pa.int64()),
+                  "text": pa.array(["x"] * n)}),
+        str(tmp_path / "documents.parquet"))
+    df = q.QUERIES["http_range_reassembly"](spark, str(tmp_path))
+    con = duckdb.connect()
+    con.sql("CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{tmp_path / 'documents.parquet'}')")
+    ok, msg = compare("http_range_reassembly", df, con,
+                      q.ORACLES["http_range_reassembly"])
+    assert ok, msg
+    [tail] = df.where("etag = 'res-124'").collect()
+    assert (tail["n_frags"], tail["complete"], tail["body_md5"]) == (2, 0, None)
